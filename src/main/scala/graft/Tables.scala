@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 
 /** Loaders for the driver-generated parquet test tables
   * (see /root/repo/TESTDATA.md). All query catalog entries read through
@@ -49,6 +49,16 @@ object Tables {
       df
     }
   }
+
+  /** Overwrite a parquet path that [[readCached]] may serve, and drop
+    * its cached schema: an in-session rewrite can change the schema,
+    * and reading the new files with the old one returns a changed or
+    * added column as silent nulls.
+    */
+  private[graft] def overwriteParquet(writer: DataFrameWriter[Row],
+                                      path: String): Unit =
+    try writer.mode("overwrite").parquet(path)
+    finally schemaCache.remove(path)
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {

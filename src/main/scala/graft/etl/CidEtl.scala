@@ -2,8 +2,9 @@ package graft.etl
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.functions.CidFunctions._
 import graft.operators.{PriorityDedup, RangeJoin}
@@ -11,13 +12,13 @@ import graft.sinks.BomCsvSink
 import graft.sources.CsvSources
 
 /** The CID-10 consolidation pipeline — full behavioral parity with the
-  * reference (/root/reference/etl_cid10.py), re-expressed as lazy
-  * DataFrame composition: every join over the small dimension tables is
-  * a broadcast join, the hand-rolled O(n·m) range scans become
-  * broadcast theta joins with first-match semantics, and the final
-  * priority dedup is a single hash-partition window — the only shuffle
-  * in the whole plan, partitioned by the dedup key, which is exactly
-  * the axis the data would scale on.
+  * reference etl_cid10.py, re-expressed as lazy DataFrame composition
+  * that builds each stage once: every join over the small dimension
+  * tables is a broadcast join, the hand-rolled O(n·m) range scans
+  * become first-match CASE chains, and the final priority dedup is a
+  * single hash-partition window — the only shuffle in the whole plan,
+  * partitioned by the dedup key, which is exactly the axis the data
+  * would scale on.
   */
 object CidEtl {
 
@@ -128,37 +129,32 @@ object CidEtl {
   // Official DataSUS directory reader — etl_cid10.py:212-327
   // -------------------------------------------------------------------
 
-  /** Stamp a file-order rank on a tiny dim so range joins can reproduce
-    * the reference's first-match-in-file-order.
+  /** Collect a tiny dim and stamp a file-order rank on it so range
+    * joins can reproduce the reference's first-match-in-file-order.
     *
     * Ordering contract: the input must come from exactly ONE CSV file
     * (enforced below — there is no cross-file order to reconstruct).
-    * The rank comes from `zipWithIndex`, whose numbering follows
-    * partition index then intra-partition order — for a single CSV
-    * file, splits are ordered by byte offset and rows stream in file
-    * order within each split, so the index IS the line number. (The
-    * previous `coalesce(1) + monotonically_increasing_id` relied on
-    * coalesce preserving row order, a contract Spark doesn't state.)
-    * These dims are catalog-sized (<= a few thousand rows), so the
-    * round-trip through an RDD is off any hot path.
+    * `collect` concatenates partitions in index order — for a single
+    * CSV file, splits are ordered by byte offset and rows stream in
+    * file order within each split, so the collect index IS the line
+    * number. The result is a local relation, so the range joins'
+    * `collect` and broadcasts never re-scan the CSV.
     */
   private def withFileOrder(df: DataFrame): DataFrame = {
     require(df.inputFiles.length == 1,
       s"file-order rank needs a single input file, got " +
         s"${df.inputFiles.length} (${df.inputFiles.take(3).mkString(", ")})")
-    val schema = df.schema.add("__ord", org.apache.spark.sql.types.LongType,
-      nullable = false)
-    val rdd = df.rdd.zipWithIndex.map { case (r, i) =>
-      org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
-    }
-    df.sparkSession.createDataFrame(rdd, schema)
+    val rows = df.collect().zipWithIndex
+      .map { case (r, i) => Row.fromSeq(r.toSeq :+ i.toLong) }
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      df.schema.add("__ord", LongType, nullable = false))
   }
 
   /** Read the 4 official CSVs and reconstruct the hierarchy: categories
     * get block/chapter via lexicographic containment (J3), blocks get
-    * chapters via containment of either bound (J4) — both as broadcast
-    * theta joins with first-match row_number instead of the reference's
-    * per-row dict scans (etl_cid10.py:266-325).
+    * chapters via containment of either bound (J4) — both as first-match
+    * CASE chains over the file-ordered range dims instead of the
+    * reference's per-row dict scans (etl_cid10.py:266-325).
     */
   def readDatasusOfficial(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
@@ -170,10 +166,6 @@ object CidEtl {
     val blocksRaw = read("GRUPOS")
     val categoriesRaw = read("CATEGORIAS")
     val subcatsRaw = read("SUBCATEGORIAS")
-
-    val chapters = chaptersRaw.select(
-      rangeId(col("CATINIC"), col("CATFIM")).as("chapter_code"),
-      trim(col("DESCRICAO").cast("string")).as("chapter_title"))
 
     // Range dims with normalized bounds + file order for first-match.
     val chapterRanges = withFileOrder(chaptersRaw.select(
@@ -198,7 +190,7 @@ object CidEtl {
       upper(trim(col("CAT").cast("string"))).as("category_code"),
       trim(col("DESCRICAO").cast("string")).as("category_title"))
     def contains(value: org.apache.spark.sql.Column, lo: String, hi: String) =
-      (r: org.apache.spark.sql.Row) =>
+      (r: Row) =>
         value.between(lit(r.getAs[String](lo)), lit(r.getAs[String](hi)))
     val withBlock = RangeJoin.firstMatchByCase(
       cats0, blockRanges.select("b_start", "b_end", "block_id", "__ord"),
@@ -230,6 +222,7 @@ object CidEtl {
       tituloCol.as("subcategory_title"),
       categoryKeyOf(col("SUBCAT")).as("category_code"))
 
+    val chapters = chapterRanges.select("chapter_code", "chapter_title")
     (chapters, blocks, categories, subcats)
   }
 
@@ -237,18 +230,20 @@ object CidEtl {
   // Consolidation — etl_cid10.py:179-196 / :357-370
   // -------------------------------------------------------------------
 
-  /** Union both branches, re-normalize codes, keep one row per code
-    * preferring "Estruturada" over "DATASUS" (W1 with a deterministic
-    * total-order tiebreak — the reference's unstable sort leaves ties
-    * nondeterministic, SURVEY.md §2.6), and stamp the run date.
-    */
+  /** Union both branches, whose codes are already normalized, then W1. */
   def consolidate(structured: DataFrame, enriched: DataFrame,
-                  runDate: LocalDate): DataFrame = {
-    val unioned = structured.unionByName(enriched)
-      .withColumn("cid_codigo", normalizeCode(col("cid_codigo")))
+                  runDate: LocalDate): DataFrame =
+    keepOnePerCode(structured.unionByName(enriched), runDate)
+
+  /** Keep one row per code preferring "Estruturada" over "DATASUS" (W1
+    * with a deterministic total-order tiebreak — the reference's
+    * unstable sort leaves ties nondeterministic, SURVEY.md §2.6), and
+    * stamp the run date.
+    */
+  private def keepOnePerCode(rows: DataFrame, runDate: LocalDate): DataFrame = {
     val tiebreak = outputCols.filterNot(_ == "cid_codigo")
       .map(c => col(c).asc_nulls_last)
-    PriorityDedup(unioned, keys = Seq("cid_codigo"),
+    PriorityDedup(rows, keys = Seq("cid_codigo"),
         priority = col("fonte").desc +: tiebreak)
       .withColumn("dt_atualizacao", lit(runDate.toString))
   }
@@ -281,28 +276,26 @@ object CidEtl {
     val structured = buildStructured(chapters, blocks, categories, subcats)
     val cats = categoryMap(chapters, blocks, categories)
     val enriched = prepareDatasus(datasusRaw, cats)
-    finish(structured, enriched, outPath, runDate)
+    finish(consolidate(structured, enriched, runDate), outPath)
   }
 
-  /** Dir mode: everything derived from the 4 official DataSUS CSVs; the
-    * DATASUS branch is synthesized from the structured branch's own
-    * output (S5 self-enrichment, etl_cid10.py:350-353).
+  /** Dir mode: everything derived from the 4 official DataSUS CSVs. The
+    * reference's S5 self-enrichment (etl_cid10.py:350-353) is not built:
+    * it re-feeds each structured row as a DATASUS row with the same
+    * code, which W1 always ranks below the "Estruturada" row (its
+    * tiebreak only orders rows within one `fonte`), so no copy can
+    * reach the output.
     */
   def runFromDatasusDir(spark: SparkSession, dir: String, outPath: String,
                         runDate: LocalDate = LocalDate.now()): Quality = {
     val (chapters, blocks, categories, subcats) =
       readDatasusOfficial(spark, dir)
     val structured = buildStructured(chapters, blocks, categories, subcats)
-    val cats = categoryMap(chapters, blocks, categories)
-    val datasusRaw = structured.select(
-      col("cid_codigo").as("codigo"), col("descricao"))
-    val enriched = prepareDatasus(datasusRaw, cats)
-    finish(structured, enriched, outPath, runDate)
+    finish(keepOnePerCode(structured, runDate), outPath)
   }
 
-  private def finish(structured: DataFrame, enriched: DataFrame,
-                     outPath: String, runDate: LocalDate): Quality = {
-    val consolidated = consolidate(structured, enriched, runDate).cache()
+  private def finish(deduped: DataFrame, outPath: String): Quality = {
+    val consolidated = deduped.cache()
     val q = quality(consolidated)
     println(s"Total de códigos consolidados: ${q.total}")
     println(s"Registros sem bloco/capítulo após merge: ${q.missingHierarchy}")

@@ -19,7 +19,7 @@ object CidFunctions {
     * a regexp strip is needed for parity on tab/newline/NBSP-padded
     * codes (latin1 0xA0 appears in DataSUS-era files).
     */
-  private val pyWs = "[ \\t\\n\\x0B\\f\\r\\x1C-\\x1F\\u0085\\u00A0" +
+  private[graft] val pyWs = "[ \\t\\n\\x0B\\f\\r\\x1C-\\x1F\\u0085\\u00A0" +
     "\\u1680\\u2000-\\u200A\\u2028\\u2029\\u202F\\u205F\\u3000]"
 
   /** Strip leading/trailing Python-style whitespace. */

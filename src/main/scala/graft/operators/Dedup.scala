@@ -106,10 +106,10 @@ object Dedup {
     * Scale posture: the corpus side is index-shaped — its banded
     * bucket rows are map-only to compute, and in production are
     * materialized ONCE via `writeBucketIndex` and probed per batch via
-    * `incrementalDedupIndexed` (measured, graft.AbIncDedup at sf1:
-    * probe-only 2.1 s vs recompute-per-batch 10.4 s — the index scan
-    * is ~100× cheaper than signature recompute, break-even after two
-    * batches; PLANS.md "q109 index"). Recomputing here keeps the
+    * `incrementalDedupIndexed` (measured at sf1: probe-only 2.1 s vs
+    * recompute-per-batch 10.4 s — the index scan is ~100× cheaper than
+    * signature recompute, break-even after two batches; PLANS.md
+    * "Round-14: q109 index materialized"). Recomputing here keeps the
     * oracled query self-contained. The day's batch buckets BROADCAST
     * into the base probe, so the 100 TB side is a map-only scan with
     * zero shuffle; only the hit set (bounded by |delta| × bands) and
@@ -135,8 +135,8 @@ object Dedup {
   def writeBucketIndex(base: DataFrame, id: Column, text: Column,
                        numHashes: Int, bands: Int, path: String,
                        shingleLen: Int = 3): Unit =
-    bandedBuckets(base, id, text, numHashes, bands, shingleLen)
-      .write.mode("overwrite").parquet(path)
+    graft.Tables.overwriteParquet(
+      bandedBuckets(base, id, text, numHashes, bands, shingleLen).write, path)
 
   /** Read a `writeBucketIndex` layout back as the base side of
     * `incrementalDedupIndexed`.
@@ -542,8 +542,9 @@ object Dedup {
                             path: String): Unit = {
     val toks = distinctTokenHashes(corpus, id, text)
     val expl = toks.select(col("doc_id"), explode(col("th")).as("tok"))
-    expl.groupBy(col("tok")).agg(count(lit(1)).as("tdf"))
-      .write.mode("overwrite").parquet(path + "/dfreq")
+    graft.Tables.overwriteParquet(
+      expl.groupBy(col("tok")).agg(count(lit(1)).as("tdf")).write,
+      path + "/dfreq")
     // read the materialized df table back rather than recomputing the
     // vocabulary aggregation inside the postings plan
     val dfreq = graft.Tables.readCached(corpus.sparkSession, path + "/dfreq")
@@ -563,17 +564,17 @@ object Dedup {
     // paid (dfreq's write is pass one), minus the checkpoint
     // materialization job and its non-fault-tolerant blocks — on a
     // real cluster each write is independently lineage-recoverable.
-    rarity
+    graft.Tables.overwriteParquet(rarity
       .withColumn("n", size(col("rtoks")))
       .select(col("doc_id"), col("n"),
         posexplode(col("rtoks")).as(Seq("pos", "tok")))
-      .write.mode("overwrite").parquet(path + "/postings")
-    toks
+      .write, path + "/postings")
+    graft.Tables.overwriteParquet(toks
       .select(col("doc_id"), array_sort(col("th")).as("stoks"))
       .withColumn("n", size(col("stoks")))
       .filter(col("n") > 0)
       .select(col("doc_id"), col("n"), col("stoks"))
-      .write.mode("overwrite").parquet(path + "/docs")
+      .write, path + "/docs")
   }
 
   /** Read a [[writeContainmentIndex]] layout back. */
@@ -612,7 +613,7 @@ object Dedup {
     * `broadcastBatch` overrides the size estimate in either direction,
     * same accountability contract as [[incrementalDedupIndexed]].
     *
-    * Measured contract (AbIncContainment, PLANS.md r20): built for
+    * Measured contract (PLANS.md r20, incremental containment): built for
     * batches ≪ corpus — at a fixed 5 k-doc batch the probe is 2.4×
     * faster than the all-pairs form at realdocs_sf3 and grows
     * sublinearly with the corpus; at batch = 10% of the corpus the

@@ -464,10 +464,10 @@ object Similarity {
               .otherwise(col("second_id")))
           .drop("bd", "second_id", "lr")
       }
-    assigned
+    graft.Tables.overwriteParquet(assigned
       .select(col("cid").as("item_id"), col("v").as("cv"),
         l2Norm(col("v")).as("cn"), col("centroid_id").as("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(path)
+      .write.partitionBy("list_id"), path)
   }
 
   /** Read a [[writeIvfIndex]] layout back as the corpus side of
@@ -524,8 +524,8 @@ object Similarity {
   /** The probed-list adjacency of the indexed miners, as UNORDERED
     * pairs (la <= lb, self pairs included) — shared by
     * [[indexedQualifyingPairs]] and the A/B volume accounting
-    * ([[graft.AbTopKIndexed]]), so the measured candidate volume is
-    * the operator's by construction, not a reimplementation.
+    * (PLANS.md "Round-17: q124 indexed capped mining"), so the
+    * measured candidate volume is the operator's by construction.
     *
     * `inDegreeCap` (0 = off, the production default) is the hub
     * mitigation EXPERIMENT the r19 adjudication left open (PLANS.md
@@ -642,7 +642,7 @@ object Similarity {
     * With [[BlockDials.ivfLists]] scaling C ∝ n, listSize stays
     * ~constant and the mining pass is Θ(n). The recall trade: a true
     * neighbor outside the doc's `nprobe` adjacent lists is missed —
-    * measured against ground truth in AbTopKIndexed (PLANS.md).
+    * measured against ground truth (PLANS.md r17, capped-mining recall).
     *
     * Skew: list sizes are k-means-balanced, not guaranteed-bounded; a
     * genuinely hot list splits under AQE skew-join handling (the probe

@@ -56,10 +56,29 @@ class CidFunctionsSpec extends SparkSpec {
   }
 
   test("normalizeCode is idempotent (property)") {
-    val samples = Seq("a00.0", " T65 ", "z99.9  ", "A", "", "0x.Y")
-    val df = samples.toDF("v")
-    val once = df.select(normalizeCode($"v").as("n"))
-    val twice = once.select(normalizeCode($"n").as("n"))
-    assert(once.collect().toSeq == twice.collect().toSeq)
+    // CidEtl.consolidate relies on this: both branches emit normalized
+    // codes, so the union is not normalized again.
+    val ws = (0 to 0xFFFF).map(_.toChar.toString).filter(_.matches(pyWs))
+    assert(ws.contains("\u00A0") && ws.contains("\u3000") && ws.size == 29)
+    val special = Seq("ß", "ŉ", "ı", "İ", "i\u0307", "ǅ", "ﬀ", "𝔞")
+    val latin1 = Seq("cólera clássica", "Ação", "ÿ", "a00.0", "T65.9")
+    val rnd = new scala.util.Random(11)
+    val alphabet = ws ++ special ++ Seq("a", "B", ".", "0", "é", "Ö")
+    val random = Seq.fill(2000)(
+      Seq.fill(rnd.nextInt(8))(alphabet(rnd.nextInt(alphabet.size))).mkString)
+    val everyChar = (0 to 0xFFFF).filterNot(c => c >= 0xD800 && c <= 0xDFFF)
+      .map(_.toChar.toString)
+    val samples: Seq[String] = Seq("a00.0", " T65 ", "z99.9  ", "A", "",
+      "0x.Y", "aBc.dE", "\u00A0a00.0\u00A0", null) ++
+      ws.flatMap(w => Seq(w, s"${w}x$w", s"$w$w", s"a$w.b")) ++
+      (special ++ latin1).flatMap(t =>
+        Seq(t, t.toUpperCase, s"\u00A0$t\u00A0", s" $t\t")) ++
+      random ++ everyChar ++ everyChar.map(c => s"\u00A0$c ")
+    val df = samples.map(Option(_)).toDF("v")
+      .select(normalizeCode($"v").as("once"))
+      .select($"once", normalizeCode($"once").as("twice"))
+    val broken = df.filter(!($"once" <=> $"twice")).collect()
+    assert(broken.isEmpty, broken.take(5).mkString(", "))
+    assert(df.filter($"once".isNull).count() == 1) // only the null input
   }
 }

@@ -24,17 +24,6 @@ class CsvSourcesSpec extends SparkSpec {
     }
   }
 
-  test("readAuto (engine extension) detects the dialect of all variants") {
-    val expected = CsvSources.readAuto(spark, s"$dir/datasus.csv")
-      .collect().map(_.toSeq).toSet
-    for (f <- Seq("datasus_comma_latin1.csv", "datasus_semi_utf8.csv",
-                  "datasus_comma_utf8.csv")) {
-      val got = CsvSources.readAuto(spark, s"$dir/$f")
-      assert(got.columns.toSeq == Seq("codigo", "descricao"), f)
-      assert(got.collect().map(_.toSeq).toSet == expected, f)
-    }
-  }
-
   test("accented latin1 content survives the cascade") {
     val rows = CsvSources.readRobust(spark, s"$dir/datasus.csv").collect()
     assert(rows.exists(_.getString(1).contains("Cólera clássica")))
