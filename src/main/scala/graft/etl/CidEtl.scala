@@ -15,7 +15,7 @@ import graft.sources.CsvSources
   * reference etl_cid10.py, re-expressed as lazy DataFrame composition
   * that builds each stage once: every join over the small dimension
   * tables is a broadcast join, the hand-rolled O(n·m) range scans
-  * become first-match CASE chains, and the final priority dedup is a
+  * become first-match binary searches, and the final priority dedup is a
   * single hash-partition window — the only shuffle in the whole plan,
   * partitioned by the dedup key, which is exactly the axis the data
   * would scale on.
@@ -153,8 +153,8 @@ object CidEtl {
   /** Read the 4 official CSVs and reconstruct the hierarchy: categories
     * get block/chapter via lexicographic containment (J3), blocks get
     * chapters via containment of either bound (J4) — both as first-match
-    * CASE chains over the file-ordered range dims instead of the
-    * reference's per-row dict scans (etl_cid10.py:266-325).
+    * binary-search lookups over the file-ordered range dims instead of
+    * the reference's per-row dict scans (etl_cid10.py:266-325).
     */
   def readDatasusOfficial(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
@@ -182,34 +182,31 @@ object CidEtl {
 
     // J3: category → first containing block range, then first
     // containing chapter range (independent first-matches, like the two
-    // separate dict scans in the reference). firstMatchByCase compiles
-    // the tiny ranges into a first-match CASE chain, so the probe side
-    // is never shuffled — at scale this is a pure map + broadcast
-    // lookup instead of a repartition-per-key row_number.
+    // separate dict scans in the reference). firstMatchBySearch compiles
+    // the tiny ranges into one binary-search lookup per probe value, so
+    // the plan stays the same size however many ranges the catalog has
+    // and the probe side is never shuffled — at scale this is a pure
+    // map + broadcast lookup instead of a repartition-per-key row_number.
     val cats0 = categoriesRaw.select(
       upper(trim(col("CAT").cast("string"))).as("category_code"),
       trim(col("DESCRICAO").cast("string")).as("category_title"))
-    def contains(value: org.apache.spark.sql.Column, lo: String, hi: String) =
-      (r: Row) =>
-        value.between(lit(r.getAs[String](lo)), lit(r.getAs[String](hi)))
-    val withBlock = RangeJoin.firstMatchByCase(
+    val withBlock = RangeJoin.firstMatchBySearch(
       cats0, blockRanges.select("b_start", "b_end", "block_id", "__ord"),
-      "__ord", contains(col("category_code"), "b_start", "b_end"))
+      "__ord", "b_start", "b_end", col("category_code"))
       .drop("b_start", "b_end")
-    val categories = RangeJoin.firstMatchByCase(
+    val categories = RangeJoin.firstMatchBySearch(
       withBlock,
       chapterRanges.select("c_start", "c_end", "chapter_code", "__ord"),
-      "__ord", contains(col("category_code"), "c_start", "c_end"))
+      "__ord", "c_start", "c_end", col("category_code"))
       .select("category_code", "category_title", "block_id", "chapter_code")
 
     // J4: block → first chapter range containing either bound (the
-    // reference's OR predicate, etl_cid10.py:317-325).
-    val blocks = RangeJoin.firstMatchByCase(
+    // reference's OR predicate, etl_cid10.py:317-325): the least of the
+    // two bounds' first matches.
+    val blocks = RangeJoin.firstMatchBySearch(
         blockRanges,
         chapterRanges.select("c_start", "c_end", "chapter_code", "__ord"),
-        "__ord",
-        r => contains(col("b_start"), "c_start", "c_end")(r)
-          || contains(col("b_end"), "c_start", "c_end")(r))
+        "__ord", "c_start", "c_end", col("b_start"), col("b_end"))
       .select(col("block_id"), col("block_title"), col("chapter_code"))
 
     // Subcategories: fixed-width dot insertion + 3-char category key.

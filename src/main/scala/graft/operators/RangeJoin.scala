@@ -1,8 +1,14 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.BinaryComparison
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
+import org.apache.spark.sql.types.DataType
+
+import graft.functions.expressions.RangeOrdinal
 
 /** Range (theta) containment join with first-match semantics
   * (SURVEY.md §2.4 J3/J4).
@@ -15,10 +21,15 @@ import org.apache.spark.sql.functions._
   * first-match when ranges overlap.
   *
   * Scale: the probe side streams at full parallelism; the build side is
-  * broadcast once per executor. For a large ranges side this would be
-  * rewritten as a prefix-equi join (bucket ranges by a coarse prefix of
-  * the key, equi-join on the bucket, then filter) — see
-  * [[RangeJoin.bucketed]].
+  * broadcast once per executor. [[RangeJoin.firstMatchBySearch]] is the
+  * production path for a catalog-sized ranges side: O(log m) comparisons
+  * per probe row, one constant-size expression in the plan, an
+  * O(m log m) build on the driver, and no shuffle of the probe side.
+  * For a ranges side too large to collect, [[RangeJoin.bucketed]]
+  * turns the nested loop into a prefix-equi join (bucket ranges by a
+  * coarse prefix of the key, equi-join on the bucket, then filter).
+  * This window form stays as the reference the others are tested
+  * against.
   */
 object RangeJoin {
 
@@ -49,35 +60,72 @@ object RangeJoin {
       .drop("__rn", "__row_id")
   }
 
-  /** Map-only first-match for a CATALOG-SIZED ranges side: the ranges
-    * are collected (same size contract as a broadcast build side) and
-    * compiled into a first-match CASE chain
-    * `WHEN pred(range_0) THEN 0 WHEN pred(range_1) THEN 1 …` evaluated
-    * per probe row — a literal transcription of the reference's
-    * first-match break loop (etl_cid10.py:303-310) — followed by one
-    * broadcast equi-join on the matched ordinal to attach the range's
-    * payload columns.
+  /** Map-only first-match for a CATALOG-SIZED ranges side: each probe
+    * row gets the smallest `ordCol` among the ranges `[lo, hi]` that
+    * contain any of `values`, then one broadcast equi-join on that
+    * ordinal attaches the range's payload columns. Unmatched left rows
+    * survive with nulls. Ordinals should be unique; a range whose
+    * ordinal is null matches nothing.
+    *
+    * The ranges are collected (the same size contract as a broadcast
+    * build side) and compiled on the driver into a [[RangeOrdinal]]
+    * per value: sorted distinct bounds plus the first-match answer for
+    * every bound and every gap between two, an O(m log m) build for m
+    * ranges. Per probe row that is one binary search, O(log m), and the
+    * plan carries one constant-size expression per value however many
+    * ranges there are. Each value is cast to the type Spark's own
+    * coercion picks for `value >= lo`, so matching is exactly the
+    * predicate `value BETWEEN lo AND hi` (null probes, null bounds and
+    * `lo > hi` ranges match nothing).
+    *
+    * Several `values` mean a match on any of them (J4's OR-of-bounds
+    * predicate): the OR's first match is the least of the per-value
+    * first matches, and `least` skips nulls.
     *
     * Unlike [[firstMatch]], the probe side is never shuffled: at 100 TB
     * probe scale the row_number variant repartitions the whole fact
-    * table on the left key just to deduplicate matches, while this is
-    * a pure map + broadcast lookup. `pred` builds the containment
-    * predicate for one collected range row (allowing OR-of-bounds
-    * forms like J4's).
+    * table on a per-row id just to deduplicate matches, while this is a
+    * pure map + broadcast lookup.
     */
-  def firstMatchByCase(
+  def firstMatchBySearch(
       left: DataFrame,
       ranges: DataFrame,
       ordCol: String,
-      pred: org.apache.spark.sql.Row => Column): DataFrame = {
-    val collected = ranges.collect().sortBy(_.getAs[Long](ordCol))
-    val chain = collected.foldRight(lit(null).cast("long")) { (row, acc) =>
-      when(pred(row), lit(row.getAs[Long](ordCol))).otherwise(acc)
+      lo: String,
+      hi: String,
+      values: Column*): DataFrame = {
+    require(values.nonEmpty, "firstMatchBySearch needs a probe value")
+    val ords = values.map { v =>
+      val t = comparisonType(left, v, ranges.schema(lo).dataType,
+        ranges.schema(hi).dataType)
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(t)
+      val collected = ranges.filter(col(ordCol).isNotNull)
+        .select(col(lo).cast(t), col(hi).cast(t), col(ordCol).cast("long"))
+        .collect().toSeq
+        .map(r => (toCatalyst(r.get(0)), toCatalyst(r.get(1)), r.getLong(2)))
+      toColumn(RangeOrdinal.build(toExpression(v.cast(t)), t, collected))
     }
+    val matched = if (ords.size == 1) ords.head else least(ords: _*)
     val r = ranges.withColumnRenamed(ordCol, "__range_ord")
-    left.withColumn("__matched_ord", chain)
+    left.withColumn("__matched_ord", matched)
       .join(broadcast(r), col("__matched_ord") === col("__range_ord"), "left")
       .drop("__matched_ord", "__range_ord")
+  }
+
+  /** The type Spark's implicit coercion compares `value >= lo` and
+    * `value <= hi` in — read off the analyzed comparisons, so the
+    * lookup orders exactly like the predicate it replaces.
+    */
+  private def comparisonType(left: DataFrame, value: Column,
+                             loType: DataType, hiType: DataType): DataType = {
+    val probe = left.select(value >= lit(null).cast(loType),
+      value <= lit(null).cast(hiType))
+    val types = probe.queryExecution.analyzed.expressions
+      .flatMap(_.collect { case c: BinaryComparison => c.left.dataType })
+      .distinct
+    require(types.size == 1,
+      s"range bounds compare in different types: ${types.mkString(", ")}")
+    types.head
   }
 
   /** Scale path for a ranges side too large to broadcast: both sides are

@@ -333,7 +333,7 @@ object CoreQueries extends Catalog {
              |ORDER BY l_orderkey, price_floor, disc_dev""".stripMargin)),
 
     // ---- numeric range (theta) join with first-match (J3/J4) ----
-    // Gated through the map-only CASE-chain variant: the probe side is
+    // Gated through the map-only binary-search variant: the probe side is
     // never shuffled (the row_number variant would repartition the
     // whole fact table on a per-row id just to dedupe matches — the
     // plan you would NOT want at 100 TB probe scale). Oracle unchanged:
@@ -348,10 +348,8 @@ object CoreQueries extends Catalog {
           // which for this catalog is exactly regionkey order
           col("r_regionkey").cast("long").as("ord"))
         val sup = Tables.load(s, dir, "supplier")
-        RangeJoin.firstMatchByCase(
-            sup, ranges, ordCol = "ord",
-            pred = row => col("s_acctbal") >= lit(row.getAs[Double]("lo")) &&
-              col("s_acctbal") <= lit(row.getAs[Double]("hi")))
+        RangeJoin.firstMatchBySearch(
+            sup, ranges, "ord", "lo", "hi", col("s_acctbal"))
           .select(col("s_suppkey"), col("r_name"), col("lo"))
           .orderBy(col("s_suppkey"))
       },

@@ -1,6 +1,12 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.CaseWhen
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.types.LongType
+
+import graft.etl.CidEtl
+import graft.functions.expressions.RangeOrdinal
 
 /** Physical-plan regression gate for the load-bearing properties in
   * PLANS.md. Each was previously verified by reading `.explain`
@@ -351,5 +357,28 @@ class PlansSpec extends SparkSpec {
     // both aggregates keep their map-side partial phase
     assert("partial_count".r.findAllIn(p).size >= 2,
       s"map-side partial aggregation missing:\n$p")
+  }
+
+  test("CidEtl dir mode: J3/J4 are constant-size range lookups, no CASE chain") {
+    val (chapters, blocks, categories, subcats) = CidEtl.readDatasusOfficial(
+      spark, "src/test/resources/cid_official")
+    val qe = CidEtl.buildStructured(chapters, blocks, categories, subcats)
+      .queryExecution
+    // counted before optimization: ConvertToLocalRelation evaluates
+    // J4's two lookups over the local block dim at plan time
+    val exprs = qe.analyzed.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(!exprs.exists {
+      case c: CaseWhen => c.dataType == LongType
+      case _ => false
+    }, s"a first-match CASE chain is back in the hierarchy build:\n${qe.analyzed}")
+    // J3's two lookups (block, chapter) + J4's least over both bounds
+    val lookups = exprs.collect { case r: RangeOrdinal => r }
+    assert(lookups.size == 4, s"expected 4 range lookups:\n${qe.analyzed}")
+    assert(!lookups.exists(_.isInstanceOf[CodegenFallback]))
+    // ~3.6k chars today, most of it CidFunctions' whitespace regex; a
+    // lookup that printed its bounds would grow this with the catalog
+    val text = qe.optimizedPlan.toString
+    assert(text.length < 4000,
+      s"plan string grew to ${text.length} chars:\n$text")
   }
 }

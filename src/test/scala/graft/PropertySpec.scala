@@ -1,6 +1,10 @@
 package graft
 
+import scala.util.Random
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructType}
 import org.scalacheck.Gen
 
 import graft.functions.CidFunctions._
@@ -96,6 +100,105 @@ class PropertySpec extends SparkSpec {
           }
         }
       }
+    }
+  }
+
+  // ---- firstMatchBySearch against the window firstMatch reference ----
+
+  // UTF-8 byte order puts U+E000 < U+FFFD < U+1F600, while UTF-16
+  // (String.compareTo) puts the surrogate pair of U+1F600 first.
+  private val rangeAlphabet =
+    Vector("A", "B", "z", "\u00e9", "\ue000", "\ufffd", "\ud83d\ude00")
+  private val stringDomain = (StringType: DataType,
+    (r: Random) => Seq.fill(r.nextInt(3))(
+      rangeAlphabet(r.nextInt(rangeAlphabet.size))).mkString: Any)
+  private val doubleDomain = (DoubleType: DataType,
+    (r: Random) => (if (r.nextBoolean())
+      Seq(Double.NaN, -0.0, 0.0, Double.PositiveInfinity,
+        Double.NegativeInfinity)(r.nextInt(5))
+    else (r.nextInt(7) - 3) * 0.5): Any)
+
+  /** A seeded catalog of 12 ranges with unique shuffled ordinals (about
+    * half have lo > hi, one bound in ten is null) and probe rows of
+    * `width` values each: random values, every range bound, and nulls.
+    * The probes are RDD-backed, so the lookup runs in generated code
+    * rather than being folded into a local relation.
+    */
+  private def rangeCase(domain: (DataType, Random => Any), seed: Long,
+                        width: Int = 1): (DataFrame, DataFrame) = {
+    val (dt, draw) = domain
+    val r = new Random(seed)
+    def value(): Any = if (r.nextInt(10) == 0) null else draw(r)
+    val ranges = r.shuffle((0 until 12).toList)
+      .map(o => Row(value(), value(), s"r$o", o.toLong))
+    val onBounds = ranges.flatMap(b => Seq(b.get(0), b.get(1)))
+    val probes = (Seq.fill(60)(value()) ++ onBounds).zipWithIndex
+      .map { case (v, i) => Row.fromSeq(i.toLong +: v +: Seq.fill(width - 1)(value())) }
+    val rangesDf = spark.createDataFrame(java.util.Arrays.asList(ranges: _*),
+      new StructType().add("lo", dt).add("hi", dt).add("name", StringType)
+        .add("ord", LongType))
+    val itemSchema = (1 to width).foldLeft(new StructType().add("id", LongType))(
+      (st, i) => st.add(s"v$i", dt))
+    (spark.createDataFrame(spark.sparkContext.parallelize(probes, 3), itemSchema),
+      rangesDf)
+  }
+
+  private def matchedNames(df: DataFrame): Map[Long, Option[String]] =
+    df.select($"id", $"name").as[(Long, Option[String])].collect().toMap
+
+  test("firstMatchBySearch == window firstMatch on random ranges: " +
+       "on-bound probes, lo > hi, nulls, UTF-8 byte order, NaN/-0.0/Inf") {
+    for (domain <- Seq(stringDomain, doubleDomain); seed <- 1L to 6L) {
+      val (items, ranges) = rangeCase(domain, seed)
+      val viaSearch = matchedNames(RangeJoin.firstMatchBySearch(
+        items, ranges, "ord", "lo", "hi", $"v1"))
+      val viaWindow = matchedNames(RangeJoin.firstMatch(
+        items, ranges, $"v1", $"lo", $"hi", Seq("id"), $"ord"))
+      assert(viaSearch == viaWindow, s"${domain._1} seed $seed")
+      assert(viaSearch.values.exists(_.nonEmpty) &&
+        viaSearch.values.exists(_.isEmpty), s"${domain._1} seed $seed")
+    }
+    // byte order, not String.compareTo: U+FFFD lies in [U+E000, U+1F600]
+    val edge = Seq((0L, "\ufffd")).toDF("id", "v1")
+    val range = Seq(("\ue000", "\ud83d\ude00", "r0", 0L)).toDF("lo", "hi", "name", "ord")
+    assert("\ue000".compareTo("\ud83d\ude00") > 0)
+    assert(matchedNames(RangeJoin.firstMatchBySearch(
+      edge, range, "ord", "lo", "hi", $"v1")) == Map(0L -> Some("r0")))
+  }
+
+  test("firstMatchBySearch over two values == first match of the OR " +
+       "predicate (J4's least form)") {
+    for (seed <- 1L to 6L) {
+      val (items, ranges) = rangeCase(stringDomain, seed, width = 2)
+      val viaSearch = matchedNames(RangeJoin.firstMatchBySearch(
+        items, ranges, "ord", "lo", "hi", $"v1", $"v2"))
+      val viaOr = items.join(broadcast(ranges),
+          $"v1".between($"lo", $"hi") || $"v2".between($"lo", $"hi"), "left")
+        .groupBy($"id").agg(min($"ord").as("ord"))
+        .select($"id", when($"ord".isNotNull, concat(lit("r"), $"ord")).as("name"))
+      assert(viaSearch == matchedNames(viaOr), s"seed $seed")
+    }
+  }
+
+  test("RangeOrdinal: generated code == interpreted eval") {
+    def run(domain: (DataType, Random => Any), seed: Long,
+            confs: (String, String)*): Map[Long, Option[String]] = {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val (items, ranges) = rangeCase(domain, seed)
+        matchedNames(RangeJoin.firstMatchBySearch(
+          items, ranges, "ord", "lo", "hi", $"v1"))
+      } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    for (domain <- Seq(stringDomain, doubleDomain); seed <- 1L to 3L) {
+      val generated = run(domain, seed,
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.fallback" -> "false")
+      val interpreted = run(domain, seed,
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false")
+      assert(generated == interpreted, s"${domain._1} seed $seed")
     }
   }
 
