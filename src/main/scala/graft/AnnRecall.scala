@@ -77,8 +77,9 @@ object AnnRecall {
     }
 
     for (nbits <- Seq(4, 6, 8)) {
-      report(s"lshTopK nbits=$nbits", lshPairs(nbits, Seq(0)), () =>
-        Similarity.lshTopK(queries, e, "vec_id", "embedding", k, nbits))
+      report(s"singleProbe nbits=$nbits", lshPairs(nbits, Seq(0)), () =>
+        Similarity.lshTopKMultiProbe(queries, e, "vec_id", "embedding", k,
+          nbits, maxHamming = 0))
       report(s"multiProbe nbits=$nbits H=1",
         lshPairs(nbits, hamming(nbits, 1)), () =>
         Similarity.lshTopKMultiProbe(

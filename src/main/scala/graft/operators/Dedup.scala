@@ -118,11 +118,10 @@ object Dedup {
   def incrementalDedup(base: DataFrame, delta: DataFrame,
                        id: Column, text: Column,
                        numHashes: Int, bands: Int,
-                       shingleLen: Int = 3,
-                       broadcastBatch: Option[Boolean] = None): DataFrame =
+                       shingleLen: Int = 3): DataFrame =
     incrementalDedupIndexed(
       bandedBuckets(base, id, text, numHashes, bands, shingleLen),
-      delta, id, text, numHashes, bands, shingleLen, broadcastBatch)
+      delta, id, text, numHashes, bands, shingleLen)
 
   /** Materialize the corpus's banded bucket rows once — the
     * production shape of the incremental path: the standing corpus's
@@ -153,9 +152,7 @@ object Dedup {
   def incrementalDedupIndexed(baseBk: DataFrame, delta: DataFrame,
                               id: Column, text: Column,
                               numHashes: Int, bands: Int,
-                              shingleLen: Int = 3,
-                              broadcastBatch: Option[Boolean] = None)
-      : DataFrame = {
+                              shingleLen: Int = 3): DataFrame = {
     // r21 note: checkpointing these batch bucket rows (three
     // consumers: the index probe + both sides of the batch-internal
     // self-join) was tried and REVERTED — the LogicalRDD barrier
@@ -167,34 +164,11 @@ object Dedup {
     // extra map-only passes.
     val deltaBk = bandedBuckets(delta, id, text, numHashes, bands,
       shingleLen)
-    // Broadcast the delta buckets only when Catalyst's size estimate
-    // says they fit the session's broadcast threshold; an oversized
-    // "batch" (someone reprocessing a month at once) then degrades to
-    // a shuffled hash join on (band, sig) instead of failing on the
-    // driver/broadcast limit. conf "-1" (broadcast disabled) also
-    // routes to the shuffle path.
-    // Read through sessionState.conf, not a raw string parse:
-    // JavaUtils.byteStringAsBytes rejects "-1" (the standard value for
-    // "broadcast disabled"), so parsing the string here would crash
-    // exactly when the user asked for the shuffle path. The typed
-    // accessor returns Long and handles -1.
-    // `broadcastBatch` overrides the estimate in either direction:
-    // stats on a freshly-computed bucket frame are estimates, and a
-    // pathological misestimate must not broadcast an oversized batch
-    // (Some(false)) or shuffle a tiny one (Some(true)) — the operator,
-    // not the planner, is accountable for the degrade path.
-    val bcThreshold: Long =
-      baseBk.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    lazy val deltaBytes =
-      deltaBk.queryExecution.optimizedPlan.stats.sizeInBytes
-    val doBroadcast = broadcastBatch.getOrElse(
-      bcThreshold >= 0 && deltaBytes <= bcThreshold)
+    // an oversized "batch" (someone reprocessing a month at once)
+    // degrades to a shuffled hash join on (band, sig) instead of
+    // failing on the driver/broadcast limit
     val probeSide =
-      if (doBroadcast) broadcast(deltaBk.as("d"))
-      else if (broadcastBatch.contains(false))
-        // an explicit opt-out must beat the planner's auto-broadcast,
-        // not just drop the hint — pin the shuffled hash join
-        deltaBk.as("d").hint("shuffle_hash")
+      if (fitsBroadcast(deltaBk)) broadcast(deltaBk.as("d"))
       else deltaBk.as("d")
     val baseHits = baseBk.as("b")
       .join(probeSide, Seq("band", "sig"))
@@ -385,13 +359,10 @@ object Dedup {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0,1], got $threshold")
     require(chunks >= 1, "chunks must be >= 1")
-    val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
     // distinct token hashes per doc (compact longs, as in jaccardPairs)
     val toks = distinctTokenHashes(df, id, text)
     val expl = toks.select(col("doc_id"), explode(col("th")).as("tok"))
     val dfreq = expl.groupBy(col("tok")).agg(count(lit(1)).as("tdf"))
-    // rarity order: (df ASC, hash ASC) — struct array_sort is
-    // field-lexicographic, giving the identical total order everywhere
     // r22: the r21 repartition+localCheckpoint of the 4-consumer docs
     // table was REVERTED on the driver's ground truth (q115 3.5 ->
     // 23.1 s at 32 cores, core-scaling ratio 0.30 — the eager
@@ -412,12 +383,7 @@ object Dedup {
     //    under both consumers and ReuseExchange shares the whole
     //    scan+tokenize+df-count subtree under it instead of a
     //    materialization barrier (the q130 pattern).
-    val docs = expl.join(dfreq, "tok")
-      .groupBy(col("doc_id"))
-      .agg(array_sort(collect_list(struct(col("tdf"), col("tok"))))
-        .as("rt"))
-      .select(col("doc_id"),
-        transform(col("rt"), s => s.getField("tok")).as("rtoks"))
+    val docs = rarityOrder(expl.join(dfreq, "tok"))
       .withColumn("n", size(col("rtoks")))
     // Prefix probe side: the floor((1-t)n)+2 rarest tokens of each doc.
     // Both join sides are SKINNY — (id, n, tok[, pos]) longs only; the
@@ -426,79 +392,20 @@ object Dedup {
     // pipeline's largest shuffle, O(chunks × Σ|doc|²) bytes). They are
     // re-attached AFTER candidate dedup, so each doc's array is
     // shuffled once, not once per (position × salt).
-    val prefLen =
-      (floor(lit(1.0 - threshold) * col("n")) + lit(2)).cast("int")
     val probes = docs.select(col("doc_id").as("a_id"), col("n").as("a_n"),
-      explode(slice(col("rtoks"), lit(1), prefLen)).as("tok"))
+      explode(slice(col("rtoks"), lit(1), prefixLen(threshold))).as("tok"))
     val index = docs.select(col("doc_id").as("b_id"), col("n").as("b_n"),
       posexplode(col("rtoks")).as(Seq("pos_b", "tok")))
-    // Both-prefix lemma (Bayardo et al. WWW'07): the FIRST shared token
-    // in the global rarity order sits inside BOTH sides' prefixes, so
-    // the index side only needs positions <= n_b - ceil(t*n_a) + 1;
-    // floor()+2 is the fp-safe slack, mirroring the probe side.
-    val bPrefixBound =
-      col("pos_b") + 1 <=
-        col("b_n") - floor(lit(threshold) * col("a_n")) + lit(2)
-    // The token key is LOW-CARDINALITY (a vocabulary, Zipf-headed) and
-    // the shuffled rows are tiny in bytes while the downstream pair
-    // enumeration is quadratic — exactly the shape AQE's byte-based
-    // coalescing funnels onto one thread (the round-10 q45/q57
-    // lesson). Salt the FULL-token index side by doc hash and
-    // replicate the PREFIX probe side across all salts — the probe
-    // explode is the (1-t)-fraction side, so replicating it costs
-    // ~(1-t)·chunks·Σ|doc| skinny rows where replicating the index
-    // would cost chunks·Σ|doc| — and pin a fixed-count repartition on
-    // (tok, salt) that AQE may not coalesce.
-    val probesS = probes
-      .withColumn("__salt", explode(sequence(lit(0), lit(chunks - 1))))
-      .repartition(nParts, col("tok"), col("__salt"))
-    val indexS = index
-      // the outer coalesce keeps this salt NON-NULLABLE (Pmod is
-      // nullable by type whatever its inputs — div-by-zero semantics
-      // — and a literal chunks >= 1 never trips it): same value for
-      // every row, but without it the join's inferred isnotnull(salt)
-      // pushes to the index-side SCAN only, making the two rarity-agg
-      // exchange subtrees canonically different — which is exactly
-      // what blocks the ReuseExchange sharing the comment above
-      // `docs` relies on.
-      .withColumn("__salt",
-        coalesce(pmod(xxhash64(col("b_id")), lit(chunks)), lit(0L))
-          .cast("int"))
-      .repartition(nParts, col("tok"), col("__salt"))
-    val candidates = probesS.join(indexS,
-        probesS("tok") === indexS("tok") &&
-          probesS("__salt") === indexS("__salt") && bPrefixBound &&
-          (col("a_n") < col("b_n") ||
-            (col("a_n") === col("b_n") && col("a_id") < col("b_id"))))
+    // the salted join replicates the PREFIX probe side: it is the
+    // (1-t)-fraction side, so replicating it costs ~(1-t)·chunks·Σ|doc|
+    // skinny rows where replicating the index would cost chunks·Σ|doc|
+    val candidates = prefixCandidates(probes, index, "b_id", threshold,
+        chunks, broadcastSmall = false)
       // a candidate surfaces once per shared prefix token; dedup the
       // skinny (a,b) pairs BEFORE attaching arrays and verifying, so
       // the merge scan runs once per pair, not once per occurrence
-      .select(col("a_id"), col("b_id"))
       .distinct()
-    // verify-side arrays from the map-only tokenize subtree (one scan
-    // each, no shuffle): same rows as the old docs join — rarity
-    // membership is exactly size(th) > 0
-    val sorted = toks
-      .select(col("doc_id"), array_sort(col("th")).as("stoks"))
-      .withColumn("n", size(col("stoks")))
-      .filter(col("n") > 0)
-    val small = sorted.select(col("doc_id").as("a_id"), col("n").as("a_n"),
-      col("stoks").as("a_toks"))
-    val big = sorted.select(col("doc_id").as("b_id"),
-      col("stoks").as("b_toks"))
-    candidates
-      .join(small, "a_id")
-      .join(big, "b_id")
-      // codegen'd merge scan with containment-target early exit (the
-      // -1 abort makes the computed containment negative: self-filters)
-      .withColumn("inter",
-        sortedIntersectAtLeastFracLeftLong(
-          col("a_toks"), col("b_toks"), threshold))
-      .withColumn("containment",
-        col("inter").cast("double") / col("a_n").cast("double"))
-      .filter(col("containment") >= threshold)
-      .select(col("a_id").as("doc_small"), col("b_id").as("doc_big"),
-        col("containment"))
+    verifyContainment(candidates, sortedTokens(toks), threshold)
   }
 
   /** The three tables of a standing containment index (see
@@ -517,6 +424,126 @@ object Dedup {
                                   text: Column): DataFrame =
     df.select(id.as("doc_id"),
       array_distinct(transform(tokens(text), t => xxhash64(t))).as("th"))
+
+  /** Hash-sorted token arrays (doc_id, stoks, n) of the docs with at
+    * least one token — what the exact-verify merge scan reads.
+    */
+  private def sortedTokens(toks: DataFrame): DataFrame =
+    toks.select(col("doc_id"), array_sort(col("th")).as("stoks"))
+      .withColumn("n", size(col("stoks")))
+      .filter(col("n") > 0)
+
+  /** Each doc's tokens in rarity order (doc_id, rtoks) from exploded
+    * (doc_id, tok, tdf) rows: (df ASC, hash ASC) — struct array_sort
+    * is field-lexicographic, giving the identical total order
+    * everywhere.
+    */
+  private def rarityOrder(withDf: DataFrame): DataFrame =
+    withDf.groupBy(col("doc_id"))
+      .agg(array_sort(collect_list(struct(col("tdf"), col("tok"))))
+        .as("rt"))
+      .select(col("doc_id"),
+        transform(col("rt"), s => s.getField("tok")).as("rtoks"))
+
+  /** Prefix length floor((1-t)·n)+2 of an `n`-token doc. */
+  private def prefixLen(threshold: Double): Column =
+    (floor(lit(1.0 - threshold) * col("n")) + lit(2)).cast("int")
+
+  /** The prefix-filter candidate join: probe rows (a_id, a_n, tok)
+    * meet index rows (b_id, b_n, pos_b, tok) on a shared token, under
+    * the both-prefix positional bound and the size orientation.
+    * Returns skinny (a_id, b_id), once per shared prefix token.
+    * `small` is the side that is broadcast (`broadcastSmall`) or else
+    * replicated across every salt; `large` streams past the broadcast,
+    * or is salted by the hash of its doc id column `largeId`.
+    */
+  private def prefixCandidates(small: DataFrame, large: DataFrame,
+                               largeId: String, threshold: Double,
+                               chunks: Int, broadcastSmall: Boolean)
+      : DataFrame = {
+    // Both-prefix lemma (Bayardo et al. WWW'07): the FIRST shared token
+    // in the global rarity order sits inside BOTH sides' prefixes, so
+    // the index side only needs positions <= n_b - ceil(t*n_a) + 1;
+    // floor()+2 is the fp-safe slack, mirroring the probe side.
+    val bPrefixBound =
+      col("pos_b") + 1 <=
+        col("b_n") - floor(lit(threshold) * col("a_n")) + lit(2)
+    val sizeOrder = col("a_n") < col("b_n") ||
+      (col("a_n") === col("b_n") && col("a_id") < col("b_id"))
+    val joined =
+      if (broadcastSmall)
+        large.join(broadcast(small),
+          large("tok") === small("tok") && bPrefixBound && sizeOrder)
+      else {
+        // The token key is LOW-CARDINALITY (a vocabulary, Zipf-headed)
+        // and the shuffled rows are tiny in bytes while the downstream
+        // pair enumeration is quadratic — exactly the shape AQE's
+        // byte-based coalescing funnels onto one thread (the round-10
+        // q45/q57 lesson). Salt the large side by doc hash, replicate
+        // the small side across all salts, and pin a fixed-count
+        // repartition on (tok, salt) that AQE may not coalesce.
+        val nParts = large.sparkSession.sessionState.conf.numShufflePartitions
+        val smallS = small
+          .withColumn("__salt", explode(sequence(lit(0), lit(chunks - 1))))
+          .repartition(nParts, col("tok"), col("__salt"))
+        val largeS = large
+          // the outer coalesce keeps this salt NON-NULLABLE (Pmod is
+          // nullable by type whatever its inputs — div-by-zero
+          // semantics — and a literal chunks >= 1 never trips it):
+          // same value for every row, but without it the join's
+          // inferred isnotnull(salt) pushes to the salted side's SCAN
+          // only, making the two rarity-agg exchange subtrees of
+          // containmentPairs canonically different — which is exactly
+          // what blocks the ReuseExchange sharing its `docs` relies on.
+          .withColumn("__salt",
+            coalesce(pmod(xxhash64(col(largeId)), lit(chunks)), lit(0L))
+              .cast("int"))
+          .repartition(nParts, col("tok"), col("__salt"))
+        smallS.join(largeS,
+          smallS("tok") === largeS("tok") &&
+            smallS("__salt") === largeS("__salt") && bPrefixBound &&
+            sizeOrder)
+      }
+    joined.select(col("a_id"), col("b_id"))
+  }
+
+  /** The exact verify phase: attach the hash-sorted arrays of
+    * `docs` (doc_id, n, stoks) to each deduped candidate (a_id, b_id)
+    * and keep containment |a∩b|/|a| >= `threshold` — the codegen'd
+    * merge scan with containment-target early exit (the -1 abort makes
+    * the computed containment negative: self-filters).
+    */
+  private def verifyContainment(candidates: DataFrame, docs: DataFrame,
+                                threshold: Double): DataFrame = {
+    val small = docs.select(col("doc_id").as("a_id"), col("n").as("a_n"),
+      col("stoks").as("a_toks"))
+    val big = docs.select(col("doc_id").as("b_id"),
+      col("stoks").as("b_toks"))
+    candidates
+      .join(small, "a_id")
+      .join(big, "b_id")
+      .withColumn("inter",
+        sortedIntersectAtLeastFracLeftLong(
+          col("a_toks"), col("b_toks"), threshold))
+      .withColumn("containment",
+        col("inter").cast("double") / col("a_n").cast("double"))
+      .filter(col("containment") >= threshold)
+      .select(col("a_id").as("doc_small"), col("b_id").as("doc_big"),
+        col("containment"))
+  }
+
+  /** Whether `df`'s Catalyst size estimate fits the session's
+    * `spark.sql.autoBroadcastJoinThreshold` (`-1`, broadcast disabled,
+    * never fits): the incremental operators broadcast their batch side
+    * only then. Read through sessionState.conf, not a raw string
+    * parse: JavaUtils.byteStringAsBytes rejects "-1", so parsing the
+    * string would crash exactly when the user asked for the shuffle
+    * path; the typed accessor returns Long and handles -1.
+    */
+  private def fitsBroadcast(df: DataFrame): Boolean = {
+    val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    limit >= 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= limit
+  }
 
   /** Materialize the standing-corpus side of INCREMENTAL containment
     * dedup once — the form [[containmentPairs]]'s own scale analysis
@@ -548,12 +575,7 @@ object Dedup {
     // read the materialized df table back rather than recomputing the
     // vocabulary aggregation inside the postings plan
     val dfreq = graft.Tables.readCached(corpus.sparkSession, path + "/dfreq")
-    val rarity = expl.join(dfreq, Seq("tok"))
-      .groupBy(col("doc_id"))
-      .agg(array_sort(collect_list(struct(col("tdf"), col("tok"))))
-        .as("rt"))
-      .select(col("doc_id"),
-        transform(col("rt"), s => s.getField("tok")).as("rtoks"))
+    val rarity = rarityOrder(expl.join(dfreq, Seq("tok")))
     // r22: the r21 checkpoint-shared docs table is gone with the q115
     // revert (same driver-ground-truth rationale — see
     // containmentPairs). The two write ACTIONS never needed a shared
@@ -569,10 +591,7 @@ object Dedup {
       .select(col("doc_id"), col("n"),
         posexplode(col("rtoks")).as(Seq("pos", "tok")))
       .write, path + "/postings")
-    graft.Tables.overwriteParquet(toks
-      .select(col("doc_id"), array_sort(col("th")).as("stoks"))
-      .withColumn("n", size(col("stoks")))
-      .filter(col("n") > 0)
+    graft.Tables.overwriteParquet(sortedTokens(toks)
       .select(col("doc_id"), col("n"), col("stoks"))
       .write, path + "/docs")
   }
@@ -609,9 +628,9 @@ object Dedup {
     * vocabulary-sized work is the tdf attach (one equi-join against
     * `dfreq` per batch). An oversized batch (someone replaying a month
     * as one "batch") degrades to the salted shuffle joins of
-    * [[containmentPairs]] instead of failing on the broadcast limit;
-    * `broadcastBatch` overrides the size estimate in either direction,
-    * same accountability contract as [[incrementalDedupIndexed]].
+    * [[containmentPairs]] instead of failing on the broadcast limit
+    * (the session's `spark.sql.autoBroadcastJoinThreshold` against the
+    * batch's size estimate decides, as in [[incrementalDedupIndexed]]).
     *
     * Measured contract (PLANS.md r20, incremental containment): built for
     * batches ≪ corpus — at a fixed 5 k-doc batch the probe is 2.4×
@@ -624,9 +643,7 @@ object Dedup {
   def containmentProbeIncremental(index: ContainmentIndex,
                                   batch: DataFrame, id: Column,
                                   text: Column, threshold: Double,
-                                  chunks: Int = 32,
-                                  broadcastBatch: Option[Boolean] = None)
-      : DataFrame = {
+                                  chunks: Int = 32): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0,1], got $threshold")
     require(chunks >= 1, "chunks must be >= 1")
@@ -634,13 +651,8 @@ object Dedup {
     val expl = toks.select(col("doc_id"), explode(col("th")).as("tok"))
     // rarity order under the corpus's frozen statistics; unseen
     // tokens coalesce to tdf 0 (sort first, match nothing)
-    val rarity = expl.join(index.dfreq, Seq("tok"), "left")
-      .withColumn("tdf", coalesce(col("tdf"), lit(0L)))
-      .groupBy(col("doc_id"))
-      .agg(array_sort(collect_list(struct(col("tdf"), col("tok"))))
-        .as("rt"))
-      .select(col("doc_id"),
-        transform(col("rt"), s => s.getField("tok")).as("rtoks"))
+    val rarity = rarityOrder(expl.join(index.dfreq, Seq("tok"), "left")
+      .withColumn("tdf", coalesce(col("tdf"), lit(0L))))
     val bdocs = toks
       .select(col("doc_id"), array_sort(col("th")).as("stoks"))
       .join(rarity, "doc_id")
@@ -649,46 +661,16 @@ object Dedup {
     // size-gate on the compact per-doc frame (the exploded probe and
     // postings forms below are the same magnitude in bytes — one long
     // per token either way)
-    val bcThreshold: Long =
-      batch.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    lazy val batchBytes =
-      bdocs.queryExecution.optimizedPlan.stats.sizeInBytes
-    val doBroadcast = broadcastBatch.getOrElse(
-      bcThreshold >= 0 && batchBytes <= bcThreshold)
-    val nParts =
-      batch.sparkSession.sessionState.conf.numShufflePartitions
-    val prefLen =
-      (floor(lit(1.0 - threshold) * col("n")) + lit(2)).cast("int")
+    val doBroadcast = fitsBroadcast(bdocs)
     // ---- direction 1: batch doc is the SMALL side ----
-    // batch prefixes probe the corpus postings; the index side's
-    // positional bound is the both-prefix lemma, as in the batch form
+    // batch prefixes probe the corpus postings
     val bprobe = bdocs.select(col("doc_id").as("a_id"),
       col("n").as("a_n"),
-      explode(slice(col("rtoks"), lit(1), prefLen)).as("tok"))
+      explode(slice(col("rtoks"), lit(1), prefixLen(threshold))).as("tok"))
     val cpost = index.postings.select(col("doc_id").as("b_id"),
       col("n").as("b_n"), col("pos").as("pos_b"), col("tok"))
-    val sizeOrder = col("a_n") < col("b_n") ||
-      (col("a_n") === col("b_n") && col("a_id") < col("b_id"))
-    val bBound = col("pos_b") + 1 <=
-      col("b_n") - floor(lit(threshold) * col("a_n")) + lit(2)
-    val cand1 =
-      if (doBroadcast)
-        cpost.join(broadcast(bprobe),
-          cpost("tok") === bprobe("tok") && bBound && sizeOrder)
-          .select(col("a_id"), col("b_id"))
-      else {
-        val cs = cpost
-          .withColumn("__salt",
-            pmod(xxhash64(col("b_id")), lit(chunks)).cast("int"))
-          .repartition(nParts, col("tok"), col("__salt"))
-        val bs = bprobe
-          .withColumn("__salt",
-            explode(sequence(lit(0), lit(chunks - 1))))
-          .repartition(nParts, col("tok"), col("__salt"))
-        cs.join(bs, cs("tok") === bs("tok") &&
-            cs("__salt") === bs("__salt") && bBound && sizeOrder)
-          .select(col("a_id"), col("b_id"))
-      }
+    val cand1 = prefixCandidates(bprobe, cpost, "b_id", threshold, chunks,
+      doBroadcast)
     // ---- direction 2: corpus doc is the SMALL side ----
     // the corpus probe prefixes are the pos-filtered subset of the
     // SAME postings scan (prefix length is the corpus doc's own
@@ -699,48 +681,26 @@ object Dedup {
       .select(col("doc_id").as("a_id"), col("n").as("a_n"), col("tok"))
     val bpost = bdocs.select(col("doc_id").as("b_id"),
       col("n").as("b_n"), posexplode(col("rtoks")).as(Seq("pos_b", "tok")))
-    val cand2 =
-      if (doBroadcast)
-        cprobe.join(broadcast(bpost),
-          cprobe("tok") === bpost("tok") && bBound && sizeOrder)
-          .select(col("a_id"), col("b_id"))
-      else {
-        val cs = cprobe
-          .withColumn("__salt",
-            pmod(xxhash64(col("a_id")), lit(chunks)).cast("int"))
-          .repartition(nParts, col("tok"), col("__salt"))
-        val bs = bpost
-          .withColumn("__salt",
-            explode(sequence(lit(0), lit(chunks - 1))))
-          .repartition(nParts, col("tok"), col("__salt"))
-        cs.join(bs, cs("tok") === bs("tok") &&
-            cs("__salt") === bs("__salt") && bBound && sizeOrder)
-          .select(col("a_id"), col("b_id"))
-      }
+    val cand2 = prefixCandidates(bpost, cprobe, "a_id", threshold, chunks,
+      doBroadcast)
     // the two directions are disjoint by the size order (an unordered
     // batch×corpus pair lands in exactly one), but each surfaces a
     // pair once per shared prefix token — dedup the skinny ids before
     // attaching arrays, as in the batch form
     val candidates = cand1.union(cand2).distinct()
-    val lookup = bdocs.select(col("doc_id"), col("n"), col("stoks"))
-      .unionByName(index.docs.select(col("doc_id"), col("n"),
-        col("stoks")))
-    val small = lookup.select(col("doc_id").as("a_id"),
-      col("n").as("a_n"), col("stoks").as("a_toks"))
-    val big = lookup.select(col("doc_id").as("b_id"),
-      col("stoks").as("b_toks"))
-    candidates
-      .join(small, "a_id")
-      .join(big, "b_id")
-      .withColumn("inter",
-        sortedIntersectAtLeastFracLeftLong(
-          col("a_toks"), col("b_toks"), threshold))
-      .withColumn("containment",
-        col("inter").cast("double") / col("a_n").cast("double"))
-      .filter(col("containment") >= threshold)
-      .select(col("a_id").as("doc_small"), col("b_id").as("doc_big"),
-        col("containment"))
+    verifyContainment(candidates,
+      bdocs.select(col("doc_id"), col("n"), col("stoks"))
+        .unionByName(index.docs.select(col("doc_id"), col("n"),
+          col("stoks"))),
+      threshold)
   }
+
+  /** Stats-truncating eager local checkpoint — see the Scaladoc on
+    * [[connectedComponents]] for why plain `localCheckpoint` is not
+    * usable inside an iterative self-join.
+    */
+  private def flatCheckpoint(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graftbridge.flatLocalCheckpoint(df)
 
   /** Per-partition spanning-forest contraction — the edge-volume
     * reduction that lets the connected-components variants accept a
@@ -761,13 +721,6 @@ object Dedup {
     * Long-id graphs only — non-long vertex ids pass through untouched
     * (the generic path is correct, just not pre-contracted).
     */
-  /** Stats-truncating eager local checkpoint — see the Scaladoc on
-    * [[connectedComponents]] for why plain `localCheckpoint` is not
-    * usable inside an iterative self-join.
-    */
-  private def flatCheckpoint(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftbridge.flatLocalCheckpoint(df)
-
   private def localSpanningForest(edges: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.LongType
     val fields = edges.schema.fields

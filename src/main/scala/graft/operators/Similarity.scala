@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
@@ -10,10 +10,10 @@ import graft.functions.expressions.CustomExpressions.boundedTopK
   *
   * Baseline: brute-force cosine top-k (exact; the corpus side streams,
   * queries broadcast — at 100 TB this is the "small query batch × huge
-  * corpus" shape, one pass, no shuffle of the corpus). Scale path:
-  * sign-bit LSH bucketing so each query only scores its bucket —
-  * trading recall for a corpus-partition-local join; an IVF variant
-  * would swap the bucket fn for learned centroids, same plan shape.
+  * corpus" shape, one pass, no shuffle of the corpus). Scale paths:
+  * sign-bit LSH buckets ([[lshTopKMultiProbe]]) or learned IVF lists
+  * ([[ivfProbeIndexed]]), so each query only scores the buckets or
+  * lists it probes — trading recall for a corpus-partition-local join.
   */
 object Similarity {
 
@@ -44,36 +44,14 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
   }
 
-  /** Approximate top-k: both sides are hashed to a sign-bit bucket and
-    * only same-bucket pairs are scored. Recall is tunable via `nbits`
-    * (fewer bits → bigger buckets → higher recall & cost). Multi-probe
-    * (also scoring neighboring buckets) would be the next refinement.
-    */
-  def lshTopK(queries: DataFrame, corpus: DataFrame,
-              id: String, vec: String, k: Int, nbits: Int,
-              roundTo: Int = 9): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val q = queries.select(col(id).as("query_id"), col(vec).as("qv"),
-      signBucket(col(vec), nbits).as("bucket"), l2Norm(col(vec)).as("qn"))
-    val c = corpus.select(col(id).as("neighbor_id"), col(vec).as("cv"),
-      signBucket(col(vec), nbits).as("bucket"), l2Norm(col(vec)).as("cn"))
-    val scored = broadcast(q).join(c, Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos",
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), roundTo))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("bucket"),
-              col("cos"), col("rank"))
-  }
-
-  /** Multi-probe LSH top-k: like [[lshTopK]], but each query also
-    * probes every bucket within Hamming distance `maxHamming` of its
-    * own (default 1 = one sign-bit flip), recovering most neighbors
-    * that a flipped bit would otherwise hide — the standard recall
-    * repair for sign-bit LSH without growing the buckets themselves.
+  /** LSH top-k: both sides are hashed to a sign-bit bucket and each
+    * query scores the corpus rows of every bucket within Hamming
+    * distance `maxHamming` of its own. `maxHamming = 0` is single-probe
+    * (only the query's own bucket; recall tunable via `nbits` — fewer
+    * bits, bigger buckets, higher recall and cost); the default 1 (one
+    * sign-bit flip) recovers most neighbors that a flipped bit would
+    * otherwise hide — the standard recall repair for sign-bit LSH
+    * without growing the buckets themselves.
     * Probe count is sum of C(nbits, i) for i <= maxHamming; measured
     * on the fixture (nbits=4, k=5): recall@5 0.14 single-probe ->
     * 0.54 at H1 (5 probes) -> higher again at H2 (11 probes) — the
@@ -206,13 +184,24 @@ object Similarity {
     * round to `roundTo` first, so assignments — and every oracle that
     * replays them (q54/q122/q124) — are bit-stable across engines and
     * across this plan change (pinned in SimilaritySpec).
+    *
+    * `runnerUp` also emits the winning (rounded) cosine `bd` and the
+    * runner-up `second_id`, so a capacity rebalance can rank a list's
+    * members by closeness. The runner-up masks the winner's slot and
+    * re-argmaxes, so on a tied max it is the second-lowest id —
+    * exactly DuckDB's `row_number() ORDER BY d DESC, id` rn=2. Only
+    * that branch pays for the second argmax: the k-means path's plan
+    * carries one `array_max` per row (pinned in SimilaritySpec).
     */
   private def assignToCentroid(rows: DataFrame, centroids: DataFrame,
-                               vecCol: String, roundTo: Int = 9): DataFrame = {
+                               vecCol: String, roundTo: Int = 9,
+                               runnerUp: Boolean = false): DataFrame = {
     val cArr = centroids.agg(
       array_sort(collect_list(struct(col("centroid_id"), col("centroid"),
         l2Norm(col("centroid")).as("cnrm")))).as("cs"))
-    rows.crossJoin(broadcast(cArr))
+    def idAt(pos: Column): Column =
+      element_at(col("cs"), pos.cast("int")).getField("centroid_id")
+    val assigned = rows.crossJoin(broadcast(cArr))
       .withColumn("nv", l2Norm(col(vecCol)))
       // a zero-norm row (or a degenerate all-zero centroid) makes the
       // divisor 0: under ANSI (Spark 4 default) a plain Divide KILLS
@@ -224,48 +213,62 @@ object Similarity {
       .withColumn("ds", transform(col("cs"), c =>
         coalesce(round(try_divide(dot(col(vecCol), c.getField("centroid")),
           col("nv") * c.getField("cnrm")), roundTo), lit(-1.0))))
-      .withColumn("centroid_id",
-        element_at(col("cs"),
-          array_position(col("ds"), array_max(col("ds"))).cast("int"))
-          .getField("centroid_id"))
-      .drop("cs", "nv", "ds")
+      .withColumn("bd", array_max(col("ds")))
+      .withColumn("bp", array_position(col("ds"), col("bd")))
+      .withColumn("centroid_id", idAt(col("bp")))
+    val out =
+      if (!runnerUp) assigned.drop("bd")
+      else assigned
+        // mask the winner's slot (-2 is below any cosine and the -1
+        // zero-norm fallback), then the same first-max argmax
+        .withColumn("ds2", transform(col("ds"), (d, i) =>
+          when(i === col("bp") - 1, lit(-2.0)).otherwise(d)))
+        .withColumn("second_id",
+          idAt(array_position(col("ds2"), array_max(col("ds2")))))
+        .drop("ds2")
+    out.drop("cs", "nv", "ds", "bp")
+  }
+
+  /** The IVF index rows (item_id, cv, cn, list_id): the corpus
+    * assigned to its nearest centroid, with the per-item norm
+    * precomputed — what [[writeIvfIndex]] materializes and what
+    * [[ivfProbeIndexed]] probes. `listCap` is [[writeIvfIndex]]'s
+    * overflow round.
+    */
+  private def ivfIndexRows(corpus: DataFrame, id: String, vec: String,
+                           centroids: DataFrame, roundTo: Int,
+                           listCap: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val v = corpus.select(col(id).as("cid"), toDoubles(col(vec)).as("v"))
+    val assigned =
+      if (listCap <= 0) assignToCentroid(v, centroids, "v", roundTo)
+      else {
+        val w = Window.partitionBy(col("centroid_id"))
+          .orderBy(col("bd").desc, col("cid"))
+        assignToCentroid(v, centroids, "v", roundTo, runnerUp = true)
+          .withColumn("lr", row_number().over(w))
+          .withColumn("centroid_id",
+            when(col("lr") <= listCap, col("centroid_id"))
+              .otherwise(col("second_id")))
+          .drop("bd", "second_id", "lr")
+      }
+    assigned.select(col("cid").as("item_id"), col("v").as("cv"),
+      l2Norm(col("v")).as("cn"), col("centroid_id").as("list_id"))
   }
 
   /** IVF (inverted-file) approximate top-k: the corpus is partitioned
-    * into centroid lists once; each query probes its `nprobe` nearest
-    * centroids and scores only those lists. Same plan shape as lshTopK
-    * with learned buckets instead of sign bits — recall/cost tunable
-    * via (k centroids, nprobe).
+    * into centroid lists; each query probes its `nprobe` nearest
+    * centroids and scores only those lists — recall/cost tunable via
+    * (k centroids, nprobe). This is [[ivfProbeIndexed]] over the index
+    * rows built in the same plan; materialize them once with
+    * [[writeIvfIndex]] when more than one batch probes the corpus.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, id: String,
               vec: String, k: Int, centroids: DataFrame, nprobe: Int,
-              roundTo: Int = 9): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val c = assignToCentroid(
-      corpus.select(col(id).as("cid"), toDoubles(col(vec)).as("v")),
-      centroids, "v", roundTo)
-      .select(col("cid").as("neighbor_id"), col("v").as("cv"),
-              col("centroid_id"))
-    // each query picks its nprobe closest centroids
-    val qAssign = queries.select(col(id).as("qid"), toDoubles(col(vec)).as("qv"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("d", round(cosine(col("qv"), col("centroid")), roundTo))
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("d").desc, col("centroid_id"))
-    val q = qAssign.withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nprobe)
-      .select(col("qid").as("query_id"), col("qv"), col("centroid_id"))
-    val scored = broadcast(q).join(c, Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(dot(col("qv"), col("cv")) /
-        (l2Norm(col("qv")) * l2Norm(col("cv"))), roundTo))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("centroid_id"),
-              col("cos"), col("rank"))
-  }
+              roundTo: Int = 9): DataFrame =
+    ivfProbeIndexed(
+      ivfIndexRows(corpus, id, vec, centroids, roundTo, listCap = 0),
+      queries, id, vec, k, centroids, nprobe, roundTo)
 
   /** All pairs above a cosine threshold (embedding near-dup detection).
     * Exact O(n²) within — use only on bounded corpora; kept exact here
@@ -348,28 +351,27 @@ object Similarity {
     */
   def cosineTopKBlocked(df: DataFrame, id: String, vec: String,
                         k: Int, threshold: Double, nbits: Int,
-                        roundTo: Int = 9, chunks: Int = 16): DataFrame = {
-    val rows = df.select(col(id).as("vid"), col(vec).as("v"),
-      signBucket(col(vec), nbits).as("bucket"), l2Norm(col(vec)).as("nrm"))
-    val (a, b, keyCond) =
-      TrianglePairs.salted(rows, "vid", Seq("bucket"), chunks)
-    val scored = a.join(b, keyCond &&
-        TrianglePairs.orderedOnce(col("a.vid"), col("b.vid")))
-      .withColumn("cos",
-        round(dot(col("a.v"), col("b.v")) /
-          (col("a.nrm") * col("b.nrm")), roundTo))
-      .filter(col("cos") >= threshold)
-      .select(col("a.vid").as("xa"), col("b.vid").as("xb"), col("cos"))
-    // both directions in ONE pass: a union of two selects over `scored`
+                        roundTo: Int = 9, chunks: Int = 16): DataFrame =
+    perDocTopK(cosinePairsBlocked(df, id, vec, threshold, nbits, roundTo,
+      chunks), "id_a", "id_b", k)
+
+  /** The capped miners' shared tail: each scored unordered pair
+    * (`a`, `b`, cos) enters the per-doc ranking in both directions,
+    * ranked by the [[graft.functions.expressions.BoundedTopK]] partial
+    * aggregate (cos DESC, neighbor id ASC); returns (doc_id,
+    * neighbor_id, cos, rank).
+    */
+  private def perDocTopK(pairs: DataFrame, a: String, b: String,
+                         k: Int): DataFrame = {
+    // both directions in ONE pass: a union of two selects over `pairs`
     // would re-run the whole pair join per branch (two scans, two
     // joins — verified in the physical plan); a 2-element explode emits
     // (a→b, b→a) from the single scored row inside the same stage
-    val directed = scored
+    val directed = pairs
       .select(explode(array(
-        struct(col("xa").as("doc_id"), col("xb").as("neighbor_id"),
-          col("cos")),
-        struct(col("xb").as("doc_id"), col("xa").as("neighbor_id"),
-          col("cos")))).as("d"))
+        struct(col(a).as("doc_id"), col(b).as("neighbor_id"), col("cos")),
+        struct(col(b).as("doc_id"), col(a).as("neighbor_id"), col("cos"))))
+        .as("d"))
       .select(col("d.doc_id").as("doc_id"),
         col("d.neighbor_id").as("neighbor_id"), col("d.cos").as("cos"))
     directed.groupBy(col("doc_id"))
@@ -377,40 +379,6 @@ object Similarity {
       .select(col("doc_id"), posexplode(col("tk")).as(Seq("p", "e")))
       .select(col("doc_id"), col("e.id").as("neighbor_id"),
         col("e.score").as("cos"), (col("p") + 1).cast("int").as("rank"))
-  }
-
-  /** Like [[assignToCentroid]], but emits the runner-up too — and the
-    * winning (rounded) cosine, so a capacity rebalance can rank a
-    * list's members by closeness. Identical winner/tie semantics
-    * (first max of the id-sorted array = lowest centroid_id); the
-    * runner-up masks the winner's slot and re-argmaxes, so on a tied
-    * max the runner-up is the second-lowest id — exactly DuckDB's
-    * `row_number() ORDER BY d DESC, id` rn=2.
-    */
-  private def assignToCentroid2(rows: DataFrame, centroids: DataFrame,
-                                vecCol: String, roundTo: Int = 9)
-      : DataFrame = {
-    val cArr = centroids.agg(
-      array_sort(collect_list(struct(col("centroid_id"), col("centroid"),
-        l2Norm(col("centroid")).as("cnrm")))).as("cs"))
-    rows.crossJoin(broadcast(cArr))
-      .withColumn("nv", l2Norm(col(vecCol)))
-      .withColumn("ds", transform(col("cs"), c =>
-        coalesce(round(try_divide(dot(col(vecCol), c.getField("centroid")),
-          col("nv") * c.getField("cnrm")), roundTo), lit(-1.0))))
-      .withColumn("bd", array_max(col("ds")))
-      .withColumn("bp", array_position(col("ds"), col("bd")))
-      .withColumn("centroid_id",
-        element_at(col("cs"), col("bp").cast("int")).getField("centroid_id"))
-      // mask the winner's slot (-2 is below any cosine and the -1
-      // zero-norm fallback), then the same first-max argmax
-      .withColumn("ds2", transform(col("ds"), (d, i) =>
-        when(i === col("bp") - 1, lit(-2.0)).otherwise(d)))
-      .withColumn("second_id",
-        element_at(col("cs"),
-          array_position(col("ds2"), array_max(col("ds2"))).cast("int"))
-          .getField("centroid_id"))
-      .drop("cs", "nv", "ds", "bp", "ds2")
   }
 
   /** Materialized IVF index: the corpus assigned to its nearest
@@ -449,26 +417,10 @@ object Similarity {
     */
   def writeIvfIndex(corpus: DataFrame, id: String, vec: String,
                     centroids: DataFrame, path: String,
-                    roundTo: Int = 9, listCap: Int = 0): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val v = corpus.select(col(id).as("cid"), toDoubles(col(vec)).as("v"))
-    val assigned =
-      if (listCap <= 0) assignToCentroid(v, centroids, "v", roundTo)
-      else {
-        val w = Window.partitionBy(col("centroid_id"))
-          .orderBy(col("bd").desc, col("cid"))
-        assignToCentroid2(v, centroids, "v", roundTo)
-          .withColumn("lr", row_number().over(w))
-          .withColumn("centroid_id",
-            when(col("lr") <= listCap, col("centroid_id"))
-              .otherwise(col("second_id")))
-          .drop("bd", "second_id", "lr")
-      }
-    graft.Tables.overwriteParquet(assigned
-      .select(col("cid").as("item_id"), col("v").as("cv"),
-        l2Norm(col("v")).as("cn"), col("centroid_id").as("list_id"))
-      .write.partitionBy("list_id"), path)
-  }
+                    roundTo: Int = 9, listCap: Int = 0): Unit =
+    graft.Tables.overwriteParquet(
+      ivfIndexRows(corpus, id, vec, centroids, roundTo, listCap)
+        .write.partitionBy("list_id"), path)
 
   /** Read a [[writeIvfIndex]] layout back as the corpus side of
     * [[ivfProbeIndexed]].
@@ -480,9 +432,10 @@ object Similarity {
   /** Probe-only ANN over a materialized [[writeIvfIndex]] layout:
     * each query picks its `nprobe` closest centroids (broadcast) and
     * only those lists of the index are scanned (dynamic partition
-    * pruning) and scored. Same ranking semantics as [[ivfTopK]] —
-    * pinned equal in SimilaritySpec — without the per-batch k-means
-    * or corpus assignment.
+    * pruning) and scored. [[ivfTopK]] is this probe over index rows
+    * built in its own plan (equality with the materialized layout is
+    * pinned in SimilaritySpec); here the k-means and the corpus
+    * assignment are not paid per batch.
     */
   def ivfProbeIndexed(index: DataFrame, queries: DataFrame, id: String,
                       vec: String, k: Int, centroids: DataFrame,
@@ -511,6 +464,46 @@ object Similarity {
         col("cos"), col("rank"))
   }
 
+  /** The probed-list adjacency of the indexed miners, as UNORDERED
+    * pairs (la <= lb, self pairs included): each list's `nprobe`
+    * nearest lists by rounded centroid cosine (ties by list id), plus
+    * itself, closed under symmetry.
+    */
+  private def probeAdjacency(centroids: DataFrame, nprobe: Int,
+                             roundTo: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    require(nprobe >= 1, "nprobe must be >= 1")
+    val cA = centroids.select(col("centroid_id").as("list_id"),
+      col("centroid").as("av"))
+    val cB = centroids.select(col("centroid_id").as("probe_list"),
+      col("centroid").as("bv"))
+    val wadj = Window.partitionBy(col("list_id"))
+      .orderBy(col("d").desc, col("probe_list"))
+    val directed = cA.crossJoin(cB)
+      .withColumn("d", round(cosine(col("av"), col("bv")), roundTo))
+      .withColumn("rn", row_number().over(wadj))
+      .filter(col("rn") <= nprobe)
+      .select(col("list_id"), col("probe_list"))
+    // a list must ALWAYS probe itself: if training produced two
+    // (rounded-)identical centroids, the d-then-id tiebreak can rank
+    // the twin ABOVE the self pair and, at nprobe=1, drop it — the
+    // affected list's members would then never be scored against
+    // each other (green gates, silent recall hole). The union is
+    // id-deduped by the distinct below.
+    // symmetric closure as UNORDERED list pairs: a pair of lists is
+    // scored once if EITHER list probes the other. Halves the dot
+    // products vs directed probing (each candidate pair scored once,
+    // both directions emitted by perDocTopK's 2-element explode) and
+    // is a recall superset of directed probing (a finds b even when
+    // only b's list probes a's).
+    directed
+      .union(centroids.select(col("centroid_id").as("list_id"),
+        col("centroid_id").as("probe_list")))
+      .select(least(col("list_id"), col("probe_list")).as("la"),
+        greatest(col("list_id"), col("probe_list")).as("lb"))
+      .distinct()
+  }
+
   /** Threshold-qualifying pairs of an IVF-indexed corpus — the shared
     * candidate stage of [[cosineTopKIndexed]] (top-k capped mining)
     * and [[nearDupComponentsIndexed]] (the dedup decision path).
@@ -521,90 +514,10 @@ object Similarity {
     * pairs in adjacency orientation) and kept at `cos >= threshold`.
     * Returns (aid, bid, cos).
     */
-  /** The probed-list adjacency of the indexed miners, as UNORDERED
-    * pairs (la <= lb, self pairs included) — shared by
-    * [[indexedQualifyingPairs]] and the A/B volume accounting
-    * (PLANS.md "Round-17: q124 indexed capped mining"), so the
-    * measured candidate volume is the operator's by construction.
-    *
-    * `inDegreeCap` (0 = off, the production default) is the hub
-    * mitigation EXPERIMENT the r19 adjudication left open (PLANS.md
-    * r19 finding 2: nearest-partner selection concentrates on full
-    * hub lists, keeping the one-decade candidate exponent at 1.12
-    * after the occupancy cap). When > 0: each list ranks its
-    * `nprobe-1` nearest non-self partners plus ONE fallback
-    * alternate; a partner admits at most `inDegreeCap` probers (by
-    * descending centroid cosine, ties by prober id); probers rejected
-    * everywhere keep their nearest partner anyway (never fewer
-    * probes, so the recall floor of the uncapped form is preserved
-    * for starved lists). Deterministic, pure plan, same C×C
-    * broadcast economics.
-    */
-  private[graft] def probeAdjacency(centroids: DataFrame, nprobe: Int,
-                                    roundTo: Int = 9,
-                                    inDegreeCap: Int = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(nprobe >= 1, "nprobe must be >= 1")
-    val cA = centroids.select(col("centroid_id").as("list_id"),
-      col("centroid").as("av"))
-    val cB = centroids.select(col("centroid_id").as("probe_list"),
-      col("centroid").as("bv"))
-    val wadj = Window.partitionBy(col("list_id"))
-      .orderBy(col("d").desc, col("probe_list"))
-    val directed =
-      if (inDegreeCap <= 0)
-        cA.crossJoin(cB)
-          .withColumn("d", round(cosine(col("av"), col("bv")), roundTo))
-          .withColumn("rn", row_number().over(wadj))
-          .filter(col("rn") <= nprobe)
-          .select(col("list_id"), col("probe_list"))
-      else {
-        val ranked = cA.crossJoin(cB)
-          .filter(col("list_id") =!= col("probe_list"))
-          .withColumn("d", round(cosine(col("av"), col("bv")), roundTo))
-          .withColumn("rn", row_number().over(wadj))
-        val p = math.max(1, nprobe - 1) // non-self probes per list
-        val cand = ranked.filter(col("rn") <= p + 1)
-        val wIn = Window.partitionBy(col("probe_list"))
-          .orderBy(col("d").desc, col("list_id"))
-        val admitted = cand
-          .withColumn("dr", row_number().over(wIn))
-          .filter(col("dr") <= inDegreeCap)
-        val wOut = Window.partitionBy(col("list_id"))
-          .orderBy(col("rn").asc)
-        val kept = admitted.withColumn("kr", row_number().over(wOut))
-          .filter(col("kr") <= p)
-          .select(col("list_id"), col("probe_list"))
-        val starved = ranked.filter(col("rn") === 1)
-          .join(kept.select(col("list_id")).distinct(),
-            Seq("list_id"), "left_anti")
-          .select(col("list_id"), col("probe_list"))
-        kept.union(starved)
-      }
-    // a list must ALWAYS probe itself: if training produced two
-    // (rounded-)identical centroids, the d-then-id tiebreak can rank
-    // the twin ABOVE the self pair and, at nprobe=1, drop it — the
-    // affected list's members would then never be scored against
-    // each other (green gates, silent recall hole). The union is
-    // id-deduped by the distinct below.
-    // symmetric closure as UNORDERED list pairs: a pair of lists is
-    // scored once if EITHER list probes the other. Halves the dot
-    // products vs directed probing (each candidate pair scored once,
-    // both directions emitted by a 2-element explode — the
-    // cosineTopKBlocked trick) and is a recall superset of directed
-    // probing (a finds b even when only b's list probes a's).
-    directed
-      .union(centroids.select(col("centroid_id").as("list_id"),
-        col("centroid_id").as("probe_list")))
-      .select(least(col("list_id"), col("probe_list")).as("la"),
-        greatest(col("list_id"), col("probe_list")).as("lb"))
-      .distinct()
-  }
-
   private[graft] def indexedQualifyingPairs(
       index: DataFrame, centroids: DataFrame, threshold: Double,
-      nprobe: Int, roundTo: Int = 9, inDegreeCap: Int = 0): DataFrame = {
-    val lp = probeAdjacency(centroids, nprobe, roundTo, inDegreeCap)
+      nprobe: Int, roundTo: Int = 9): DataFrame = {
+    val lp = probeAdjacency(centroids, nprobe, roundTo)
     val a = index.select(col("item_id").as("aid"), col("cv").as("av"),
       col("cn").as("an"), col("list_id").as("la"))
     val b = index.select(col("item_id").as("bid"), col("cv").as("bv"),
@@ -656,24 +569,9 @@ object Similarity {
     */
   def cosineTopKIndexed(index: DataFrame, centroids: DataFrame,
                         k: Int, threshold: Double, nprobe: Int,
-                        roundTo: Int = 9, inDegreeCap: Int = 0): DataFrame = {
-    val scored =
-      indexedQualifyingPairs(index, centroids, threshold, nprobe, roundTo,
-        inDegreeCap)
-    val directed = scored
-      .select(explode(array(
-        struct(col("aid").as("doc_id"), col("bid").as("neighbor_id"),
-          col("cos")),
-        struct(col("bid").as("doc_id"), col("aid").as("neighbor_id"),
-          col("cos")))).as("d"))
-      .select(col("d.doc_id").as("doc_id"),
-        col("d.neighbor_id").as("neighbor_id"), col("d.cos").as("cos"))
-    directed.groupBy(col("doc_id"))
-      .agg(boundedTopK(col("cos"), col("neighbor_id"), k).as("tk"))
-      .select(col("doc_id"), posexplode(col("tk")).as(Seq("p", "e")))
-      .select(col("doc_id"), col("e.id").as("neighbor_id"),
-        col("e.score").as("cos"), (col("p") + 1).cast("int").as("rank"))
-  }
+                        roundTo: Int = 9): DataFrame =
+    perDocTopK(indexedQualifyingPairs(index, centroids, threshold, nprobe,
+      roundTo), "aid", "bid", k)
 
   /** Blocked near-dup pairs fed STRAIGHT into connected components:
     * the dedup-decision composition whose output is Θ(n) labels — the
@@ -721,11 +619,9 @@ object Similarity {
     */
   def nearDupComponentsIndexed(index: DataFrame, centroids: DataFrame,
                                threshold: Double, nprobe: Int,
-                               roundTo: Int = 9,
-                               inDegreeCap: Int = 0): DataFrame = {
+                               roundTo: Int = 9): DataFrame = {
     val pairs =
-      indexedQualifyingPairs(index, centroids, threshold, nprobe, roundTo,
-        inDegreeCap)
+      indexedQualifyingPairs(index, centroids, threshold, nprobe, roundTo)
         .select(col("aid"), col("bid"))
     Dedup.connectedComponentsStar(index.select(col("item_id")),
       col("item_id"), pairs, col("aid"), col("bid"))

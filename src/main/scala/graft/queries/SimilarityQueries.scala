@@ -260,8 +260,9 @@ object SimilarityQueries extends Catalog {
     Q("q51_ann_lsh",
       (s, dir) => {
         val e = Tables.load(s, dir, "embeddings")
-        Similarity.lshTopK(
-            e.filter(col("vec_id") < 10), e, "vec_id", "embedding", K, NBits)
+        Similarity.lshTopKMultiProbe(
+            e.filter(col("vec_id") < 10), e, "vec_id", "embedding", K, NBits,
+            maxHamming = 0)
           .orderBy(col("query_id"), col("rank"))
       },
       Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,

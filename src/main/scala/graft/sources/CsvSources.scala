@@ -19,28 +19,18 @@ object CsvSources {
       throw new FileNotFoundException(s"File not found: $path")
   }
 
-  /** S1: robust scan — tries (sep, encoding) in the reference's order
+  /** S1: robust scan. The reference tries (sep, encoding) in the order
     * ((";",latin1), (",",latin1), (";",utf-8), (",",utf-8)) and accepts
     * the first parse yielding >= 1 column
-    * (/root/reference/etl_cid10.py:28-39).
+    * (reference `etl_cid10.py:28-39`). In Spark that cascade never
+    * gets past its first dialect: PERMISSIVE parsing plus latin1, which
+    * decodes any byte, makes the (";", latin1) read yield >= 1 column
+    * for every non-empty file (a comma file garbles into one column,
+    * as in the reference), and an empty file yields no columns under
+    * every dialect alike. So S1 is the S3 official read.
     */
-  def readRobust(spark: SparkSession, path: String): DataFrame = {
-    requireExists(spark, path)
-    val dialects = Seq(
-      (";", "ISO-8859-1"), (",", "ISO-8859-1"),
-      (";", "UTF-8"), (",", "UTF-8"))
-    dialects.iterator
-      .map { case (sep, enc) =>
-        try {
-          val df = spark.read
-            .option("header", "true").option("sep", sep)
-            .option("encoding", enc).csv(path)
-          if (df.columns.length >= 1) Some(df) else None
-        } catch { case _: Exception => None }
-      }
-      .collectFirst { case Some(df) => df }
-      .getOrElse(spark.read.option("header", "true").csv(path))
-  }
+  def readRobust(spark: SparkSession, path: String): DataFrame =
+    readOfficial(spark, path)
 
   /** S2: plain CSV scan (",", UTF-8, header) with existence check. */
   def readDefault(spark: SparkSession, path: String): DataFrame = {

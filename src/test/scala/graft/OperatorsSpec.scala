@@ -445,21 +445,29 @@ class OperatorsSpec extends SparkSpec {
       .createTempDirectory("graft_cidx_spec").toString
     Dedup.writeContainmentIndex(corpus, $"doc_id", $"text", path)
     val idx = Dedup.readContainmentIndex(spark, path)
-    for (t <- Seq(0.5, 0.9); bc <- Seq(Some(true), Some(false))) {
-      val got = Dedup.containmentProbeIncremental(idx, batch,
-          $"doc_id", $"text", t, chunks = 3, broadcastBatch = bc)
-        .as[(Long, Long, Double)].collect().toSet
+    // both join paths: the session's broadcast threshold picks them
+    // (default: the batch broadcasts; -1: the salted shuffle joins)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    for (t <- Seq(0.5, 0.9); bc <- Seq(saved, "-1")) try {
+      spark.conf.set(key, bc)
+      val probe = Dedup.containmentProbeIncremental(idx, batch,
+          $"doc_id", $"text", t, chunks = 3)
+      val got = probe.as[(Long, Long, Double)].collect().toSet
+      val salted = probe.queryExecution.executedPlan.toString
+        .contains("__salt")
+      assert(salted == (bc == "-1"), s"t=$t threshold=$bc salted=$salted")
       val want = Dedup.containmentPairs(all, $"doc_id", $"text", t)
         .filter(($"doc_small" % 4 === 0) =!= ($"doc_big" % 4 === 0))
         .as[(Long, Long, Double)].collect().toSet
-      assert(got == want, s"t=$t broadcastBatch=$bc")
+      assert(got == want, s"t=$t threshold=$bc")
       if (t == 0.9) {
         val pairs = got.map(p => (p._1, p._2))
         assert(pairs.contains((12L, 5L)) || pairs.contains((5L, 12L)),
           "planted direction-1 pair missing")
         assert(pairs.contains((3L, 8L)), "planted direction-2 pair missing")
       }
-    }
+    } finally spark.conf.set(key, saved)
   }
 
   test("dupSpanStats: positional windows, within-doc repeats count, " +

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -94,8 +95,8 @@ class SimilaritySpec extends SparkSpec {
       df.select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toSet
     val brute = pairs(
       Similarity.bruteForceTopK(queries, e, "vec_id", "embedding", 5))
-    val single = pairs(
-      Similarity.lshTopK(queries, e, "vec_id", "embedding", 5, 4))
+    val single = pairs(Similarity.lshTopKMultiProbe(
+      queries, e, "vec_id", "embedding", 5, 4, maxHamming = 0))
     val multi = pairs(
       Similarity.lshTopKMultiProbe(queries, e, "vec_id", "embedding", 5, 4))
     val rs = single.intersect(brute).size.toDouble / brute.size
@@ -214,6 +215,37 @@ class SimilaritySpec extends SparkSpec {
       .select($"item_id", $"list_id".cast("long"))
       .as[(Long, Long)].collect().toMap
     assert(got == ref)
+  }
+
+  test("k-means assignment plan carries one array_max per row") {
+    // the merged assignment computes the runner-up only for the
+    // listCap rebalance: each Lloyd step's optimized plan (captured
+    // at its localCheckpoint action) must hold exactly ONE array_max —
+    // a second one means every training row pays for the runner-up
+    import org.apache.spark.sql.catalyst.expressions.ArrayMax
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") plans.add(qe.optimizedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val e = Tables.load(spark, dir, "embeddings")
+      Similarity.trainCentroids(e, "vec_id", "embedding", 4, 2).collect()
+      eventually(timeout(30.seconds)) { assert(plans.size == 2) }
+    } finally spark.listenerManager.unregister(listener)
+    plans.forEach { p =>
+      val maxes = p.collect { case n =>
+        n.expressions.map(_.collect { case m: ArrayMax => m }.size).sum
+      }.sum
+      assert(maxes == 1, s"expected one array_max per row:\n$p")
+    }
   }
 
   test("cosineTopKIndexed == window prefix of the probed-list pair set") {
@@ -338,40 +370,6 @@ class SimilaritySpec extends SparkSpec {
       s"self-probe lost on identical centroids: $pairs")
   }
 
-  test("probeAdjacency in-degree cap: structural invariants hold") {
-    // a deliberate hub topology: c0 is every other centroid's nearest
-    // partner; c1..c5 are pairwise less similar than each is to c0
-    val hub = Seq(1.0, 0.0, 0.0, 0.0)
-    val dirs = Seq(
-      Seq(0.9, 0.436, 0.0, 0.0), Seq(0.9, 0.0, 0.436, 0.0),
-      Seq(0.9, 0.0, 0.0, 0.436), Seq(0.9, -0.436, 0.0, 0.0),
-      Seq(0.9, 0.0, -0.436, 0.0))
-    val cents = ((0L, hub) +: dirs.zipWithIndex.map {
-      case (v, i) => ((i + 1).toLong, v)
-    }).toDF("centroid_id", "centroid")
-    def pairs(cap: Int): Set[(Long, Long)] =
-      Similarity.probeAdjacency(cents, nprobe = 2, inDegreeCap = cap)
-        .as[(Long, Long)].collect().toSet
-    val uncapped = pairs(0)
-    val capped = pairs(1)
-    val selfPairs = (0L to 5L).map(i => (i, i)).toSet
-    // every list always probes itself, capped or not
-    assert(selfPairs.subsetOf(uncapped) && selfPairs.subsetOf(capped))
-    // the starved-prober fallback: no list loses non-self probing
-    // entirely under the cap (the uncapped recall-floor guarantee)
-    val nonSelf = capped -- selfPairs
-    (0L to 5L).foreach { i =>
-      assert(nonSelf.exists(p => p._1 == i || p._2 == i),
-        s"list $i lost all non-self probing under the in-degree cap")
-    }
-    // deterministic: identical on re-invocation
-    assert(pairs(1) == capped)
-    // cap off reproduces the uncapped hub star exactly: 5 pairs, all
-    // touching the hub
-    assert(uncapped -- selfPairs ==
-      (1L to 5L).map(i => (0L, i)).toSet)
-  }
-
   test("nearDupComponents == min-label CC over the blocked pair set") {
     val e = Tables.load(spark, dir, "embeddings")
     val (t, nbits) = (0.3, 2)
@@ -396,10 +394,11 @@ class SimilaritySpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val centroids = Seq((10L, Seq(1.0, 0.0)), (20L, Seq(0.0, 1.0)))
       .toDF("centroid_id", "centroid")
-    def build(cap: Int): Map[Long, Long] = {
+    def build(cap: Int, cents: DataFrame = centroids,
+              tag: String = ""): Map[Long, Long] = {
       val path = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_spec_listcap_$cap").getAbsolutePath
-      Similarity.writeIvfIndex(corpus, "vec_id", "embedding", centroids,
+        s"graft_spec_listcap_$tag$cap").getAbsolutePath
+      Similarity.writeIvfIndex(corpus, "vec_id", "embedding", cents,
         path, listCap = cap)
       spark.read.parquet(path)
         .select($"item_id", $"list_id".cast("long")).as[(Long, Long)]
@@ -410,6 +409,34 @@ class SimilaritySpec extends SparkSpec {
     assert(build(3) ==
       Map(1L -> 10L, 2L -> 10L, 3L -> 10L, 4L -> 20L, 5L -> 20L, 6L -> 20L),
       "overflow did not move the two farthest members to the runner-up")
+    // runner-up on a TIED max (15 duplicates 10): the overflow target
+    // is rn=2 of the (d DESC, centroid_id) window over the explicit
+    // crossJoin — the second-lowest id, DuckDB's replay of the same
+    // order (q124/q125)
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.VectorFunctions.{cosine, toDoubles}
+    val tied = Seq((10L, Seq(1.0, 0.0)), (15L, Seq(1.0, 0.0)),
+      (20L, Seq(0.0, 1.0))).toDF("centroid_id", "centroid")
+    val ranked = corpus.select($"vec_id", toDoubles($"embedding").as("v"))
+      .crossJoin(tied)
+      .withColumn("d", round(cosine($"v", $"centroid"), 9))
+      .withColumn("rn", row_number().over(Window.partitionBy($"vec_id")
+        .orderBy($"d".desc, $"centroid_id")))
+      .filter($"rn" <= 2)
+      .select($"vec_id", $"rn", $"centroid_id", $"d")
+      .as[(Long, Int, Long, Double)].collect()
+    val first = ranked.collect { case (v, 1, c, d) => v -> ((c, d)) }.toMap
+    val second = ranked.collect { case (v, 2, c, _) => v -> c }.toMap
+    val cap = 2
+    val want = first.toSeq.groupBy(_._2._1).values.flatMap { members =>
+      members.sortBy { case (v, (_, d)) => (-d, v) }.zipWithIndex.map {
+        case ((v, (c, _)), i) => v -> (if (i < cap) c else second(v))
+      }
+    }.toMap
+    assert(want == Map(1L -> 10L, 2L -> 10L, 3L -> 15L, 4L -> 15L,
+      5L -> 15L, 6L -> 20L))
+    assert(build(cap, tied, "tied") == want,
+      "overflow target is not the tie-broken runner-up")
   }
 
   test("nearDupComponentsIndexed == min-label CC over the indexed pair set") {
